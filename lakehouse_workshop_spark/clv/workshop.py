@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_workshop_spark import catalog as cat
 from lakehouse_workshop_spark.clv.pipeline import LTV_RESULT_SCHEMA, clv_score_group
-from lakehouse_workshop_spark.functions.exprs import case_bucket
+from lakehouse_workshop_spark.functions.exprs import case_bucket, dec_sum
 
 DB = "customer_info"
 
@@ -72,7 +72,9 @@ def clv_dashboard(spark: SparkSession) -> DataFrame:
         ltv.groupBy(band.alias("clv_band"))
         .agg(
             F.count("*").alias("n_customers"),
-            F.sum(F.col("PRED_CLV").cast("double")).alias("total_pred_clv"),
+            # DECIMAL(38,6) sum: exact, so the total does not depend on the
+            # order partial sums arrive in (as in clv_segment_rollup).
+            dec_sum("PRED_CLV", scale=6).alias("total_pred_clv"),
         )
         .orderBy("clv_band")
     )

@@ -20,26 +20,38 @@ import numpy as np
 from lakehouse_workshop_spark.models.special import hyp2f1, lgamma, nelder_mead
 
 
-def _neg_log_likelihood(
-    log_params: np.ndarray, x: np.ndarray, t_x: np.ndarray, T: np.ndarray, penalizer: float
-) -> float:
-    r, alpha, a, b = np.exp(np.clip(log_params, -15.0, 15.0))
-    # x is small-integer frequency: compress to unique values so the three
-    # data-dependent lgamma evaluations run over ~20 points, not the whole
-    # group (bit-identical — same values, indexed back).
+def _objective(x: np.ndarray, t_x: np.ndarray, T: np.ndarray, penalizer: float):
+    """Penalized mean negative log-likelihood over log-params, as a closure
+    that holds the data-only terms so a fit computes them once, not once
+    per Nelder-Mead evaluation.
+
+    x is small-integer frequency: the lgamma terms depend on x alone, so
+    they run over its ~20 unique values in one stacked ``lgamma`` call and
+    are indexed back. Every expression keeps the association order of the
+    textbook form, so the value is bit-identical to evaluating it row by
+    row. Non-finite values map to 1e12 so the simplex walks away from them.
+    """
     ux, inv = np.unique(x, return_inverse=True)
-    a1 = lgamma(r + ux)[inv] - lgamma(r) + r * np.log(alpha)
-    a2 = lgamma(a + b) + lgamma(b + ux)[inv] - lgamma(b) - lgamma(a + b + ux)[inv]
-    a3 = -(r + x) * np.log(alpha + T)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        a4 = np.where(
-            x > 0,
-            np.log(a) - np.log(np.where(x > 0, b + x - 1.0, 1.0)) - (r + x) * np.log(alpha + t_x),
-            -np.inf,
-        )
-    ll = a1 + a2 + np.logaddexp(a3, a4)
-    penalty = penalizer * np.sum(np.exp(np.clip(log_params, -15.0, 15.0)) ** 2)
-    return -np.mean(ll) + penalty
+    k = len(ux)
+    pos = x > 0
+    x_pos, t_x_pos = x[pos], t_x[pos]
+    a4 = np.full_like(x, -np.inf)
+
+    def obj(log_params: np.ndarray) -> float:
+        params = np.exp(np.clip(log_params, -15.0, 15.0))
+        r, alpha, a, b = params
+        ab = a + b
+        lg = lgamma(np.concatenate((r + ux, b + ux, ab + ux, (r, ab, b))))
+        lg_r, lg_ab, lg_b = lg[3 * k :]
+        a1 = lg[:k] - lg_r + r * np.log(alpha)
+        a2 = lg_ab + lg[k : 2 * k] - lg_b - lg[2 * k : 3 * k]
+        a3 = -(r + x) * np.log(alpha + T)
+        a4[pos] = np.log(a) - np.log(b + x_pos - 1.0) - (r + x_pos) * np.log(alpha + t_x_pos)
+        ll = (a1 + a2)[inv] + np.logaddexp(a3, a4)
+        v = -np.mean(ll) + penalizer * np.sum(params**2)
+        return v if np.isfinite(v) else 1e12
+
+    return obj
 
 
 @dataclass
@@ -65,10 +77,7 @@ class BetaGeoModel:
         t_x = np.asarray(recency, float)
         T = np.asarray(T, float)
 
-        def obj(theta: np.ndarray) -> float:
-            v = _neg_log_likelihood(theta, x, t_x, T, penalizer_coef)
-            return v if np.isfinite(v) else 1e12
-
+        obj = _objective(x, t_x, T, penalizer_coef)
         best, best_f = None, np.inf
         # Deterministic multi-start: MLE surface has flat valleys.
         for start in ([0.1] * 4, [1.0] * 4, [0.5, 2.0, 0.5, 2.0]):
@@ -79,9 +88,10 @@ class BetaGeoModel:
         return cls(r=float(r), alpha=float(alpha), a=float(a), b=float(b))
 
     # M2 — conditional expected purchases over the next ``t`` periods
-    # (ref ``DS:204,238,473``: t=52.08 weeks).
+    # (ref ``DS:204,238,473``: t=52.08 weeks). ``t`` may be a column of
+    # horizons, giving one row of expectations per horizon.
     def conditional_expected_purchases(
-        self, t: float, frequency: np.ndarray, recency: np.ndarray, T: np.ndarray
+        self, t: float | np.ndarray, frequency: np.ndarray, recency: np.ndarray, T: np.ndarray
     ) -> np.ndarray:
         r, alpha, a, b = self.r, self.alpha, self.a, self.b
         x = np.asarray(frequency, float)
@@ -138,9 +148,11 @@ class BetaGeoModel:
         clv = np.zeros_like(x)
         prev = np.zeros_like(x)
         m = np.asarray(monetary_value, float)
-        for month in range(1, int(time) + 1):
-            horizon = month * weeks_per_month
-            cum = self.conditional_expected_purchases(horizon, frequency, recency, T)
+        # All horizons as one (time, n) block: one hyp2f1 call whose rows
+        # converge independently, so each row equals its own scalar-t call.
+        horizons = (np.arange(1, int(time) + 1) * weeks_per_month)[:, None]
+        cums = self.conditional_expected_purchases(horizons, frequency, recency, T)
+        for month, cum in enumerate(cums, start=1):
             clv = clv + m * (cum - prev) / (1.0 + discount_rate) ** month
             prev = cum
         return clv

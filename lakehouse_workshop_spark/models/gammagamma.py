@@ -16,24 +16,28 @@ import numpy as np
 from lakehouse_workshop_spark.models.special import lgamma, nelder_mead
 
 
-def _neg_log_likelihood(
-    log_params: np.ndarray, x: np.ndarray, m: np.ndarray, penalizer: float
-) -> float:
-    p, q, v = np.exp(np.clip(log_params, -15.0, 15.0))
-    # frequency x is small-integer — evaluate the lgamma terms over unique
-    # values only (see bgnbd._neg_log_likelihood).
+def _objective(x: np.ndarray, m: np.ndarray, penalizer: float):
+    """Penalized mean negative log-likelihood over log-params, as a closure
+    over the data-only terms (see ``bgnbd._objective``): log(m), log(x),
+    m*x and the unique frequencies are computed once per fit, and the
+    three lgamma terms run in one stacked call over the unique values.
+    """
     ux, inv = np.unique(x, return_inverse=True)
-    ll = (
-        lgamma(p * ux + q)[inv]
-        - lgamma(p * ux)[inv]
-        - lgamma(q)
-        + q * np.log(v)
-        + (p * x - 1.0) * np.log(m)
-        + p * x * np.log(x)
-        - (p * x + q) * np.log(v + m * x)
-    )
-    penalty = penalizer * np.sum(np.exp(np.clip(log_params, -15.0, 15.0)) ** 2)
-    return -np.mean(ll) + penalty
+    k = len(ux)
+    log_m, log_x, mx = np.log(m), np.log(x), m * x
+
+    def obj(log_params: np.ndarray) -> float:
+        params = np.exp(np.clip(log_params, -15.0, 15.0))
+        p, q, v = params
+        pu = p * ux
+        lg = lgamma(np.concatenate((pu + q, pu, (q,))))
+        head = (lg[:k] - lg[k : 2 * k] - lg[2 * k] + q * np.log(v))[inv]
+        px = pu[inv]
+        ll = head + (px - 1.0) * log_m + px * log_x - (px + q) * np.log(v + mx)
+        val = -np.mean(ll) + penalizer * np.sum(params**2)
+        return val if np.isfinite(val) else 1e12
+
+    return obj
 
 
 @dataclass
@@ -54,10 +58,7 @@ class GammaGammaModel:
         keep = (x > 0) & (m > 0)
         x, m = x[keep], m[keep]
 
-        def obj(theta: np.ndarray) -> float:
-            val = _neg_log_likelihood(theta, x, m, penalizer_coef)
-            return val if np.isfinite(val) else 1e12
-
+        obj = _objective(x, m, penalizer_coef)
         best, best_f = None, np.inf
         for start in ([1.0, 1.0, 1.0], [0.1, 0.1, 0.1], [2.0, 3.0, 5.0]):
             theta, f = nelder_mead(obj, np.log(np.asarray(start)))

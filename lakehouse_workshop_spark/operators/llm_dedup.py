@@ -377,6 +377,8 @@ def _minhash_sigs_df(docs: "DataFrame") -> "DataFrame":
             counts: list = []
             xs: list = []
             for doc_id, text in zip(pdf["doc_id"].to_numpy(), pdf["text"]):
+                if text is None:  # split(NULL) is NULL: no shingles, no row
+                    continue
                 toks = text.split(" ")
                 if len(toks) < W:
                     continue

@@ -9,19 +9,56 @@ ever sees it.
 
 from __future__ import annotations
 
+import itertools
 import math
+import os
+import shutil
+import tempfile
 from dataclasses import dataclass, field
 
 import duckdb
 import pandas as pd
 
 from lakehouse_workshop_spark.catalog import TESTDATA_TABLES
+from lakehouse_workshop_spark.session import driver_memory
+
+_SPILL_SEQ = itertools.count()
+
+
+def _mem_bytes(spec: str) -> int:
+    """Bytes in a JVM memory string (``9g``, ``512m``; no unit means MiB)."""
+    spec = spec.strip().lower().removesuffix("b")
+    shift = {"k": 10, "m": 20, "g": 30, "t": 40}
+    if spec[-1] in shift:
+        return int(spec[:-1]) << shift[spec[-1]]
+    return int(spec) << 20
+
+
+def _duck_memory_limit() -> str:
+    """Half the physical RAM the Spark JVM heap leaves free, at least 1 GiB.
+
+    DuckDB defaults to 80% of RAM and the local-mode JVM heap takes ~60%
+    (``session._default_driver_mem``). The oracle runs beside a live
+    session, so the two defaults overcommit RAM and the kernel kills the
+    process on a large corpus instead of DuckDB spilling to disk.
+    """
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    free = total - _mem_bytes(driver_memory())
+    return f"{max(1 << 30, free // 2) >> 20}MiB"
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
-    con = duckdb.connect()
+    """DuckDB over the testdata tables under ``sf_dir``, memory-bounded
+    beside the Spark JVM. It spills to a private temp directory (DuckDB
+    creates it on first spill and removes it on close), capped at half the
+    free disk so a query too large for the host fails with DuckDB's
+    out-of-memory error instead of filling the disk Spark shuffles to."""
+    tmp = tempfile.gettempdir()
+    spill = os.path.join(tmp, f"spark-graft-duckdb-{os.getpid()}-{next(_SPILL_SEQ)}")
+    con = duckdb.connect(config={"memory_limit": _duck_memory_limit(), "temp_directory": spill})
+    # Set after connecting: as a connect-time option the cap is not
+    # enforced on the configured temp directory (DuckDB 1.0).
+    con.sql(f"SET max_temp_directory_size = '{shutil.disk_usage(tmp).free // 2 >> 20}MiB'")
     for name in TESTDATA_TABLES:
         path = f"{sf_dir}/{name}.parquet"
         # Probe corpora are multi-file parquet DIRECTORIES holding only

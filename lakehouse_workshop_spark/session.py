@@ -40,6 +40,12 @@ def _default_driver_mem() -> str:
     return f"{max(2, min(32, int(total * 0.6 / (1 << 30))))}g"
 
 
+def driver_memory() -> str:
+    """The ``spark.driver.memory`` the factory sets: SPARK_GRAFT_DRIVER_MEM
+    or the RAM-sized default."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem())
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -130,10 +136,7 @@ def get_spark(
         # shuffle spill. 32g removes it (11s steady after the same
         # sweep). Cluster deployments size executors explicitly and
         # override via SPARK_GRAFT_DRIVER_MEM.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
-        )
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")

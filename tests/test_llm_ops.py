@@ -52,6 +52,7 @@ def test_minhash_sigs_kernel_matches_sql(spark, sf_dir):
         (2, " a b c d "),            # leading/trailing space
         (3, "x y"),                  # shorter than SHINGLE_WIDTH: no row
         (4, "a b c a b c a b c"),    # heavy shingle dedup
+        (5, None),                   # NULL text: no row
     ]
     spark.createDataFrame(rows, ["doc_id", "text"]).createOrReplaceTempView(
         "documents"
@@ -84,7 +85,7 @@ def test_ann_lsh_buckets_kernel_matches_sql(spark, sf_dir):
     dots→buckets CTEs exactly — margin-repaired BLAS signs vs the
     interpreted left fold."""
     S._emb_view(spark, sf_dir)
-    S._ann_lsh_buckets_view(spark)
+    S._ann_lsh_buckets_view(spark, sf_dir)
     k_rows = sorted(
         (r.vec_id, int(r.tbl), r.bucket)
         for r in spark.table("ann_lsh_buckets").collect()

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from lakehouse_workshop_spark import catalog as cat
 from lakehouse_workshop_spark.clv.pipeline import LTV_RESULT_SCHEMA
@@ -52,3 +53,42 @@ def test_workshop_end_to_end(spark, summary_csv):
     finally:
         cat.drop_table(spark, "customer_info.ltv_results")
         cat.drop_table(spark, "customer_info.summary_2011")
+
+
+def test_dashboard_independent_of_partitioning(spark):
+    """``total_pred_clv`` is an exact decimal sum, so the dashboard is the
+    same however the scored table is split into files and tasks."""
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    n = 3_000
+    ids = np.arange(n, dtype=np.int32)
+    # ~1e-7 .. 1e8: a float32 spread wide enough that double sums of it
+    # round, so a partition-order-dependent sum would show.
+    clv = np.exp(rng.normal(2.0, 6.0, n)).astype(np.float32)
+    f32 = np.zeros(n, np.float32)
+    pdf = pd.DataFrame(
+        {
+            "GroupKey": ids % 8 + 1,
+            "CustomerID": ids,
+            "FREQUENCY": np.ones(n, np.int64),
+            "RECENCY": f32,
+            "AGE": f32,
+            "AVG_MONETARY_VALUE": f32,
+            "PRED_VISITS": f32,
+            "PROB_ALIVE": f32,
+            "PROB_ALIVE_t": f32,
+            "PRED_CLV": clv,
+        }
+    )
+    scored = spark.createDataFrame(pdf, schema=LTV_RESULT_SCHEMA)
+    cat.create_database(spark, workshop.DB)
+    dashboards = []
+    try:
+        for df in (scored.coalesce(1), scored.orderBy(F.desc("CustomerID")).repartition(7)):
+            cat.write_table(df, f"{workshop.DB}.ltv_results")
+            dashboards.append(workshop.clv_dashboard(spark).collect())
+    finally:
+        cat.drop_table(spark, f"{workshop.DB}.ltv_results")
+    assert int(sum(r.n_customers for r in dashboards[0])) == n
+    assert dashboards[0] == dashboards[1]
