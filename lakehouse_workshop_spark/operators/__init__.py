@@ -7,7 +7,9 @@ and (where SQL-expressible) a DuckDB oracle SQL string under the same name.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -17,86 +19,10 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 TIERS: dict[str, int] = {}
 
-# Explicit driver-pass order for round 19. The driver's correctness pass
-# verifies the first 50 registry entries per round, so coverage rotates.
-# The ordering rule (enforced by tests/test_registry.py, rebuilt each round
-# with tools/make_driver_order.py; --check = read-only validate):
-#
-# The window is all hard slot demands plus changed-source re-verifies:
-# the 26 stale rows (latest driver row <= r13) and the 18 entries whose
-# r18 deferral is now due (embedding_normalized is both), then the seven
-# closures whose own code changed this round (the BG/NBD and Gamma-Gamma
-# kernel rewrite behind clv_distributed and clv_segment_rollup, the
-# MinHash kernel's NULL-text guard). The five closures that reach the
-# MinHash kernel only through a shared helper carry an explicit one-round
-# deferral in the manifest (make_driver_order --defer-changed); they are
-# hard slot demands for r20.
-# Capacity policy (r15 verdict ask #7, decided here rather than by
-# drift): at 210 registered, P=6 holds through 250. BEFORE registering
-# past ~230, the committed plan is to retire the labeled exact-baseline
-# twins from the driver rotation FIRST — each SCALE_PATHS baseline
-# (embedding_near_pairs, cosine_topk, ngram_containment_pairs, ...) is
-# coverage-redundant with its registered production twin, and its
-# correctness is additionally pinned by the twins' recall/containment
-# contracts in pytest — and only bump to P=7 (capacity 350, staleness
-# bound 7 rounds) if registration pressure continues after that. A
-# P bump is a real cost (every row waits up to one round longer
-# between re-verifies), so the cheap retirement lever goes first.
-DRIVER_ORDER: list[str] = [
-    # -- 1-26: stale rows ---------------------------------------------------
-    "streaming_click_to_purchase",
-    "streaming_sessionize_flushed",
-    "session_window_batch",
-    "stratified_sample",
-    "shard_assignments",
-    "corpus_clean",
-    "dedup_incremental",
-    "pseudonymize_users",
-    "doc_chunks",
-    "repetition_ratio",
-    "bpe_merge_candidates",
-    "integrity_orphans",
-    "hot_keys_events",
-    "order_price_histogram",
-    "embedding_normalized",
-    "shipping_priority",
-    "local_supplier_volume",
-    "rolling_revenue_7d",
-    "customer_order_gaps",
-    "big_quantity_orders",
-    "disjunctive_part_revenue",
-    "basket_part_pairs",
-    "customer_order_distribution",
-    "docs_length_outliers",
-    "embedding_label_centroids",
-    "bigram_lm_score",
-    # -- 27-43: r18 deferrals now due -------------------------------------
-    "packing_efficiency",
-    "domain_mixture_weights",
-    "lang_source_mix",
-    "token_entropy",
-    "zipf_slope",
-    "curriculum_stages",
-    "contamination_by_benchmark",
-    "source_token_kl",
-    "source_quality_gate",
-    "token_budget_plan_mixture",
-    "token_budget_rebalance",
-    "token_budget_materialize",
-    "token_budget_fill_report",
-    "training_shard_manifest",
-    "training_shard_append",
-    "embedding_quantize_int8",
-    "embedding_pca_spectrum",
-    # -- 44-50: source edited this round ----------------------------------
-    "clv_distributed",
-    "clv_segment_rollup",
-    "minhash_signatures",
-    "minhash_lsh_pairs",
-    "minhash_band_stats",
-    "minhash_lsh_incremental",
-    "materialize_training_set_v2",
-]
+# Written by tools/make_driver_order.py; the entries staged for its target
+# round are the driver's correctness window.
+MANIFEST = Path(__file__).resolve().parents[2] / "tools" / "driver_manifest.json"
+
 # Baseline → production twin. Entries here are *labeled baselines*: exact
 # but super-linear (quadratic self-joins, brute-force scans) — correct as
 # ground truth, wrong as the operator a 100 TB pipeline schedules. The
@@ -116,12 +42,8 @@ def query(
     and names the registered twin that holds its cost sub-quadratic at
     scale (exposed via :func:`all_scale_paths`).
 
-    ``tier`` orders the registry the driver iterates: tier 1 is the
-    reference-derived + first-wave surface, tier 2 the later extensions.
-    The round-1 driver correctness pass stopped partway through the
-    registry (50 of 57 rows), so whatever its budget is, the queries it
-    must verify have to come first — within a tier, registration order is
-    preserved.
+    ``tier`` labels the reference-derived + first-wave surface (1) and
+    the later extensions (2); it does not affect registry order.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -149,9 +71,9 @@ def query(
 
 
 def all_queries() -> dict[str, QueryFn]:
-    # Import for side effect of registration. Iteration order =
-    # DRIVER_ORDER (the driver's 50-row correctness window), then any
-    # remaining queries in registration order.
+    # Import for side effect of registration. Iteration order = the
+    # driver's correctness window (see driver_window), then the rest;
+    # registration order within each group.
     from lakehouse_workshop_spark.operators import (  # noqa: F401
         relational,
         insights,
@@ -173,11 +95,21 @@ def all_queries() -> dict[str, QueryFn]:
         profiling,
     )
 
-    pos = {n: i for i, n in enumerate(DRIVER_ORDER)}
-    unknown = [n for n in DRIVER_ORDER if n not in QUERIES]
-    assert not unknown, f"DRIVER_ORDER names not registered: {unknown}"
-    order = sorted(QUERIES, key=lambda n: pos.get(n, len(DRIVER_ORDER)))
-    return {n: QUERIES[n] for n in order}  # stable within the tail
+    window = driver_window()
+    order = sorted(QUERIES, key=lambda n: n not in window)
+    return {n: QUERIES[n] for n in order}
+
+
+def driver_window() -> set[str]:
+    """Names the manifest stages for its target round; empty without one."""
+    if not MANIFEST.exists():
+        return set()
+    manifest = json.loads(MANIFEST.read_text())
+    target = manifest.pop("_meta", {}).get("target_round")
+    return {
+        n for n, e in manifest.items()
+        if target is not None and e.get("window_round") == target
+    }
 
 
 def all_oracles() -> dict[str, str]:

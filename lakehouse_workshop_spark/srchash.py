@@ -42,8 +42,13 @@ import functools
 import hashlib
 import inspect
 import types
+from pathlib import Path
 
 PACKAGE = "lakehouse_workshop_spark"
+# Oracle SQL may embed absolute fixture paths (the CLV golden parquet);
+# they hash relative to the checkout, so a hash does not depend on where
+# the repository lives.
+_CHECKOUT = str(Path(__file__).resolve().parents[1])
 
 _MISSING = object()
 _SIMPLE = (int, float, complex, bool, str, bytes, type(None))
@@ -372,7 +377,7 @@ def governed_source_hash(fn, oracle: str | None = None) -> str:
     parts = collect_sources(fn)
     blob = "\n".join(f"{k}\n{v}" for k, v in sorted(parts.items()))
     if oracle is not None:
-        blob += "\n-- oracle --\n" + oracle
+        blob += "\n-- oracle --\n" + oracle.replace(_CHECKOUT, "<checkout>")
     return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 

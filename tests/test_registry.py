@@ -1,35 +1,37 @@
 """Registry governance tests.
 
-Round 2's verdict flagged that 25 of 75 registered queries had never
-received a driver correctness row because the driver verifies only the
-first 50 registry entries. These tests pin the invariants that prevent
-that gap from reopening: the explicit order list is well-formed, and
-every registered query is covered by the union of the previous round's
-recorded rows and the current 50-entry window.
+The driver verifies only the first 50 registry entries per round, and
+``tools/make_driver_order.py`` chooses those 50 and records them in
+``tools/driver_manifest.json``. These tests pin the invariants of that
+window against the recorded green driver rows: it leads the registry,
+it holds every stale, never-verified and changed query, and every
+registered query is covered by a green row or the window.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
+import subprocess
+import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 
 from lakehouse_workshop_spark import operators as ops
+from lakehouse_workshop_spark.srchash import registry_hash
 
 DRIVER_WINDOW = 50
-MANIFEST_PATH = str(REPO / "tools" / "driver_manifest.json")
+TOOL = REPO / "tools" / "make_driver_order.py"
 
-
-def _correctness_files() -> list[str]:
-    from glob import glob
-
-    return sorted(glob(str(REPO / "CORRECTNESS_r*.json")))
+_spec = importlib.util.spec_from_file_location("make_driver_order", str(TOOL))
+mdo = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(mdo)
 
 
 def _manifest() -> dict:
-    return json.load(open(MANIFEST_PATH)) if os.path.exists(MANIFEST_PATH) else {}
+    return json.loads(ops.MANIFEST.read_text()) if ops.MANIFEST.exists() else {}
 
 
 def _eff_round(max_round: int, manifest: dict) -> int:
@@ -45,28 +47,42 @@ def _eff_round(max_round: int, manifest: dict) -> int:
     return min(max_round, as_of)
 
 
-def test_driver_order_is_duplicate_free_and_registered():
-    assert len(ops.DRIVER_ORDER) == len(set(ops.DRIVER_ORDER))
-    registered = set(ops.all_queries())
-    missing = [n for n in ops.DRIVER_ORDER if n not in registered]
-    assert not missing, f"DRIVER_ORDER names not registered: {missing}"
+def test_manifest_window_leads_the_registry():
+    window = ops.driver_window()
+    names = list(ops.all_queries())
+    assert len(window) <= DRIVER_WINDOW
+    missing = sorted(window - set(names))
+    assert not missing, f"manifest window names not registered: {missing}"
+    assert set(names[: len(window)]) == window
+
+
+def test_window_entries_stage_current_hash():
+    """Once the manifest is current, every window entry's staged hash is
+    its current governed hash: an engine edit after the last write must
+    rerun the tool, or the driver verifies code the manifest never names
+    (two CLV entries staged hashes their source no longer had)."""
+    _, max_round = mdo.latest_rows()
+    manifest = _manifest()
+    if manifest.get("_meta", {}).get("as_of_round") != max_round:
+        return  # grace window; bounded by test_manifest_rebuilt_after_artifact
+    stale = sorted(
+        n for n in ops.driver_window() if manifest[n]["hash"] != registry_hash(n)
+    )
+    assert not stale, (
+        f"window entries staged with an outdated hash: {stale} — rerun "
+        "tools/make_driver_order.py"
+    )
 
 
 def test_window_union_covers_every_registered_query():
-    """Every registered query has a driver row already (any recorded round),
-    sits in the upcoming window, or is brand-new this round (recorded as
-    pending in the manifest — the staleness test hardens that grace to
-    exactly one round). Nothing ships unverified for more than a round."""
-    files = _correctness_files()
-    if not files:
+    """Every registered query has a green driver row already (any recorded
+    round), sits in the upcoming window, or is brand-new this round
+    (recorded as pending in the manifest — the staleness test hardens that
+    grace to exactly one round). Nothing ships unverified for more than a
+    round."""
+    latest, max_round = mdo.latest_rows()
+    if not max_round:
         return
-    seen: set[str] = set()
-    max_round = 0
-    for path in files:
-        seen |= set(json.load(open(path)))
-        max_round = max(
-            max_round, int(os.path.basename(path).split("_r")[1].split(".")[0])
-        )
     names = list(ops.all_queries())
     window = set(names[:DRIVER_WINDOW])
     manifest = _manifest()
@@ -74,22 +90,22 @@ def test_window_union_covers_every_registered_query():
     uncovered = [
         n
         for n in names
-        if n not in seen
+        if n not in latest
         and n not in window
         and manifest.get(n, {}).get("first_seen_round", 0) <= eff
     ]
     assert not uncovered, (
-        "registered queries with no driver row in ANY recorded round, outside "
-        f"the current {DRIVER_WINDOW}-entry window, and older than this round: "
-        f"{uncovered} — move them into DRIVER_ORDER's window or they ship "
-        "unverified"
+        "registered queries with no green driver row in ANY recorded round, "
+        f"outside the current {DRIVER_WINDOW}-entry window, and older than "
+        f"this round: {uncovered} — rerun tools/make_driver_order.py or they "
+        "ship unverified"
     )
 
 
 def test_stale_queries_lead_the_window():
     """Self-scaling staleness: every query re-verifies at least every
     P-th round, P = max(3, ceil(registry / window) + 1) — a query whose
-    latest driver row is P or more rounds old must sit inside the
+    latest green driver row is P or more rounds old must sit inside the
     upcoming 50-entry window. Derived from the recorded
     CORRECTNESS_r*.json files, so the rule re-evaluates itself each
     round without hand-maintained lists.
@@ -102,15 +118,7 @@ def test_stale_queries_lead_the_window():
     out-of-window rewrites. Deriving P from the registry size keeps the
     rule satisfiable with ~window/P slots of headroom per round while
     still bounding how long any row can go unre-verified."""
-    from glob import glob
-
-    latest: dict[str, int] = {}
-    max_round = 0
-    for path in sorted(glob(str(REPO / "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
-        max_round = max(max_round, rnd)
-        for name in json.load(open(path)):
-            latest[name] = max(latest.get(name, 0), rnd)
+    latest, max_round = mdo.latest_rows()
     if not max_round:
         return
     names = list(ops.all_queries())
@@ -141,8 +149,8 @@ def test_stale_queries_lead_the_window():
     ]
     assert not overdue, (
         f"queries whose driver coverage violates the staleness rule and are "
-        f"outside the {DRIVER_WINDOW}-entry window: {overdue} — rebuild "
-        "DRIVER_ORDER with tools/make_driver_order.py"
+        f"outside the {DRIVER_WINDOW}-entry window: {overdue} — rerun "
+        "tools/make_driver_order.py"
     )
 
 
@@ -152,15 +160,10 @@ def test_manifest_rebuilt_after_artifact():
     next engine commit: committing engine work on top of a fresh artifact
     without rerunning tools/make_driver_order.py is the round-5/round-7
     failure mode, and it fails loudly here instead of two tests away."""
-    import subprocess
-
-    files = _correctness_files()
+    _, max_round = mdo.latest_rows()
     manifest = _manifest()
-    if not files or not manifest:
+    if not max_round or not manifest:
         return
-    max_round = max(
-        int(os.path.basename(p).split("_r")[1].split(".")[0]) for p in files
-    )
     as_of = manifest.get("_meta", {}).get("as_of_round")
     assert as_of is not None, (
         "tools/driver_manifest.json has no _meta.as_of_round stamp — "
@@ -178,9 +181,7 @@ def test_manifest_rebuilt_after_artifact():
         ).stdout.strip()
         return int(out) if out else 0
 
-    newest_artifact = max(
-        files, key=lambda p: int(os.path.basename(p).split("_r")[1].split(".")[0])
-    )
+    newest_artifact = str(REPO / f"CORRECTNESS_r{max_round:02d}.json")
     t_artifact = last_commit_ts(newest_artifact) or int(
         os.path.getmtime(newest_artifact)
     )
@@ -191,7 +192,7 @@ def test_manifest_rebuilt_after_artifact():
         f"CORRECTNESS_r{max_round:02d} landed after the manifest was built "
         f"(as of r{as_of:02d}) and engine commits have since been made — the "
         "first engine commit of a round must include the window rotation: "
-        "rebuild DRIVER_ORDER and rerun tools/make_driver_order.py"
+        "rerun tools/make_driver_order.py"
     )
 
 
@@ -206,10 +207,9 @@ def test_changed_source_is_in_window():
     hash drift — r10 verdict "What's wrong #1".)"""
     from lakehouse_workshop_spark.srchash import governed_source_hash
 
-    manifest_path = str(REPO / "tools" / "driver_manifest.json")
-    if not os.path.exists(manifest_path):
+    manifest = _manifest()
+    if not manifest:
         return
-    manifest = json.load(open(manifest_path))
     target_round = manifest.get("_meta", {}).get("target_round")
     queries = ops.all_queries()
     oracles = ops.all_oracles()
@@ -246,32 +246,84 @@ def test_changed_source_is_in_window():
 
 def test_never_verified_queries_are_windowed():
     """Atomic-registration invariant (since round 8): whenever the
-    manifest is current, EVERY query with no driver row sits inside the
-    upcoming window — make_driver_order.py refuses to write otherwise —
-    so a new registration is always verified in its birth round. The
+    manifest is current, EVERY query with no green driver row sits inside
+    the upcoming window — make_driver_order.py refuses to write otherwise
+    — so a new registration is always verified in its birth round. The
     only state where a never-verified query may sit outside the window
     is the artifact-just-landed grace, which
     test_manifest_rebuilt_after_artifact bounds at one engine commit."""
-    files = _correctness_files()
-    if not files:
+    latest, max_round = mdo.latest_rows()
+    if not max_round:
         return
-    seen: set[str] = set()
-    max_round = 0
-    for path in files:
-        seen |= set(json.load(open(path)))
-        max_round = max(
-            max_round, int(os.path.basename(path).split("_r")[1].split(".")[0])
-        )
-    manifest = _manifest()
-    if manifest.get("_meta", {}).get("as_of_round", 0) < max_round:
+    if _manifest().get("_meta", {}).get("as_of_round", 0) < max_round:
         return  # grace window; bounded by test_manifest_rebuilt_after_artifact
     names = list(ops.all_queries())
     window = set(names[:DRIVER_WINDOW])
-    unwindowed = [n for n in names if n not in seen and n not in window]
+    unwindowed = [n for n in names if n not in latest and n not in window]
     assert not unwindowed, (
         f"never-driver-verified queries outside the window: {unwindowed} — "
-        "add them to DRIVER_ORDER and rerun tools/make_driver_order.py"
+        "rerun tools/make_driver_order.py"
     )
+
+
+def test_select_window_classes_and_rerun():
+    """The selection rule on a synthetic manifest (target round 11, P=3):
+    hard demands first, then changed without a deferral, then changed
+    with a current one, then the oldest green rows. A windowed overdue
+    deferral keeps its mark, so a same-round rerun that displaces other
+    entries cannot defer it a second time, and a displaced entry's
+    staged hash is demoted so its change is still seen next round."""
+    names = ["fresh", "deferred", "changed", "old", "overdue", "stale", "pending"]
+    latest = {"fresh": 10, "changed": 10, "deferred": 10, "old": 9,
+              "overdue": 9, "stale": 3}
+    prev = {n: {"hash": "h", "verified_hash": "h", "window_round": r,
+                "first_seen_round": 1} for n, r in latest.items()}
+    prev["overdue"]["deferred_round"] = 10
+    prev["deferred"]["deferred_round"] = 11
+    hashes = {n: "h" for n in names + ["new"]}
+    hashes.update(changed="h2", deferred="h2", overdue="h2")
+
+    def select(names, prev, latest, max_round, size):
+        stale, pending, changed, overdue = mdo.demands(
+            names, prev, latest, max_round, hashes
+        )
+        assert stale == ["stale"]
+        hard = set(stale + pending + overdue)
+        window = mdo.select_window(
+            names, prev, latest, max_round, hard, set(changed), size
+        )
+        assert hard <= window
+        deferrable = {n for n in changed if n not in window}
+        return window, mdo.build_manifest(
+            names, prev, latest, max_round, hashes, window, deferrable
+        )
+
+    hard = {"overdue", "stale", "pending"}
+    assert select(names, prev, latest, 10, 6)[0] == hard | {"changed", "deferred", "old"}
+    window, m = select(names, prev, latest, 10, 4)
+    assert window == hard | {"changed"}
+    assert m["overdue"]["deferred_round"] == 10  # kept while windowed
+    assert (m["overdue"]["hash"], m["overdue"]["window_round"]) == ("h2", 11)
+    assert m["deferred"]["deferred_round"] == 11
+    assert m["fresh"] == prev["fresh"]
+    assert m["pending"] == {"hash": "h", "window_round": 11, "first_seen_round": 11}
+
+    # same-round rerun: a new registration displaces "changed", never "overdue"
+    m.pop("_meta")
+    window, m2 = select(names + ["new"], m, latest, 10, 4)
+    assert window == hard | {"new"}
+    assert m2["overdue"]["deferred_round"] == 10
+    assert m2["changed"] == {"hash": "h", "verified_hash": "h", "window_round": 10,
+                             "first_seen_round": 1, "deferred_round": 11}
+    # next round, no new rows: the displaced deferral is a hard demand
+    m2.pop("_meta")
+    *_, overdue = mdo.demands(names + ["new"], m2, latest, 11, hashes)
+    assert {"changed", "deferred", "overdue"} <= set(overdue)
+    # a green row for the current source clears the deferral
+    cleared = mdo.build_manifest(
+        ["overdue"], m2, {"overdue": 11}, 11, hashes, set(), set()
+    )
+    assert "deferred_round" not in cleared["overdue"]
 
 
 def test_make_driver_order_check_is_read_only():
@@ -280,20 +332,14 @@ def test_make_driver_order_check_is_read_only():
     diagnostic that mutates governance state is a footgun (the r13
     verdict's prescribed --check form was silently ignored and
     rewrote the manifest on every invocation)."""
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    manifest_path = os.path.join(repo, "tools", "driver_manifest.json")
-    before = open(manifest_path, "rb").read()
+    before = ops.MANIFEST.read_bytes()
     proc = subprocess.run(
-        [_sys.executable, os.path.join(repo, "tools", "make_driver_order.py"),
-         "--check"],
+        [sys.executable, str(TOOL), "--check"],
         capture_output=True,
         text=True,
-        cwd=repo,
+        cwd=str(REPO),
     )
-    after = open(manifest_path, "rb").read()
+    after = ops.MANIFEST.read_bytes()
     assert before == after, "--check must leave the manifest byte-identical"
     # exit 0 (window satisfies demands) or 1 (slots missing) are both
     # legitimate validation outcomes — but each must show its banner,
@@ -307,14 +353,13 @@ def test_make_driver_order_check_is_read_only():
     # a typo of --check must refuse loudly, not fall through to the
     # write path
     typo = subprocess.run(
-        [_sys.executable, os.path.join(repo, "tools", "make_driver_order.py"),
-         "--chekc"],
+        [sys.executable, str(TOOL), "--chekc"],
         capture_output=True,
         text=True,
-        cwd=repo,
+        cwd=str(REPO),
     )
     assert typo.returncode == 2, (typo.returncode, typo.stdout)
-    assert open(manifest_path, "rb").read() == before
+    assert ops.MANIFEST.read_bytes() == before
 
 
 def test_scale_path_targets_resolve():
@@ -338,8 +383,7 @@ def test_plans_md_current():
 
     from lakehouse_workshop_spark.srchash import governed_source_hash
 
-    plans = os.path.join(os.path.dirname(__file__), "..", "PLANS.md")
-    txt = open(plans).read()
+    txt = (REPO / "PLANS.md").read_text()
     recorded = dict(re.findall(r"<!-- hash (\S+) ([0-9a-f]{16}) -->", txt))
     assert recorded, "PLANS.md has no source-hash footer — rerun tools/plan_audit.py"
     oracles = ops.all_oracles()
@@ -358,6 +402,21 @@ def test_plans_md_current():
     )
 
 
+def test_optimization_docs_cite_existing_plans():
+    """Every ``plans/...txt`` dump an OPTIMIZATION doc cites exists: a plan
+    claim is checkable only if its dump is committed."""
+    import re
+
+    cited = {
+        path
+        for doc in REPO.glob("OPTIMIZATION_r*.md")
+        for path in re.findall(r"plans/[\w/.-]+\.txt", doc.read_text())
+    }
+    assert cited
+    missing = sorted(p for p in cited if not (REPO / p).exists())
+    assert not missing, f"OPTIMIZATION docs cite missing plan dumps: {missing}"
+
+
 def test_vouched_hash_promotes_on_landed_artifact():
     """r16 governance fix: `make_driver_order.vouched` must treat the
     staged hash as verified once a driver row exists for the staged
@@ -365,14 +424,6 @@ def test_vouched_hash_promotes_on_landed_artifact():
     `verified_hash` field only updates on the next write. Validating on
     the raw field spuriously flagged all 14 of r15's verified-in-window
     source changes as drifted at r16 start and refused the manifest."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "make_driver_order", str(REPO / "tools" / "make_driver_order.py")
-    )
-    mdo = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mdo)
-
     staged = {"hash": "new", "verified_hash": "old", "window_round": 15}
     # artifact for r15 landed -> staged hash is the vouched one
     assert mdo.vouched(staged, 15) == "new"
@@ -423,14 +474,6 @@ def test_correctness_row_vouches_only_when_green():
     verified only when the driver actually verified it — rows carry
     rows_match/schema_match/hash_match/err and can record failures, and
     a failed run must not promote a drifted hash for governance."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "make_driver_order", str(REPO / "tools" / "make_driver_order.py")
-    )
-    mdo = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mdo)
-
     green = {
         "rows_match": True,
         "schema_match": True,

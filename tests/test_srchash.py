@@ -53,6 +53,21 @@ def test_oracle_string_is_governed():
     assert governed_source_hash(fn, oracle) != governed_source_hash(fn, None)
 
 
+
+def test_oracle_checkout_path_is_not_governed():
+    """The CLV oracles read their golden parquet by absolute path, which
+    once made two governed hashes differ between clones of one commit.
+    The checkout root hashes as a placeholder; any other path still
+    governs."""
+    from lakehouse_workshop_spark.srchash import _CHECKOUT
+
+    fn = all_queries()["clv_distributed"]
+    assert _CHECKOUT in all_oracles()["clv_distributed"]
+    sql = "SELECT * FROM read_parquet('{}/tests/fixtures/clv_golden.parquet')"
+    here = governed_source_hash(fn, sql.format(_CHECKOUT))
+    assert here == governed_source_hash(fn, sql.format("<checkout>"))
+    assert here != governed_source_hash(fn, sql.format("/elsewhere"))
+
 _MOD_V1 = '''
 KNOB = 8
 

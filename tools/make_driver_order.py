@@ -1,42 +1,48 @@
-"""Rebuild the driver-window manifest (freshness governance).
+"""Choose the driver window and rebuild its manifest (freshness governance).
 
 The driver's correctness pass verifies only the first 50 registry entries
-per round, so coverage rotates through ``operators.DRIVER_ORDER``. Two
-rules decide who must be in the upcoming window (both enforced by
-``tests/test_registry.py``):
+per round. This tool picks those 50 and records them in
+``tools/driver_manifest.json``; ``operators.all_queries()`` puts the
+entries staged for the manifest's target round first. Two rules decide who
+must be in the upcoming window (both enforced by ``tests/test_registry.py``):
 
 1. **Self-scaling staleness**: every query re-verifies at least every
    P-th round, where P = max(3, ceil(registry / window) + 1) — the
    rotation period grows with the registry so the rule stays satisfiable
-   with headroom for ~window/P new queries per round. (History: <=1-round
-   staleness became unsatisfiable at 121 queries in round 6 and was
-   relaxed to a fixed 3-round rotation, which itself hit exact capacity
-   at 144 queries the same round; the ceil() form is the principled
-   fix — at 144 queries P = 4, capacity 200.)
+   with headroom for ~window/P new queries per round.
 2. **Changed source re-verifies**: any query whose governed source
    (transitive package closure of the registered function — module
    helpers, constants, nested lambdas — plus the expanded oracle SQL;
    see ``lakehouse_workshop_spark/srchash.py``) changed since the hash
-   recorded at its last window entry must be in the window. Until round
-   11 this hashed only ``inspect.getsource(fn)``, which is how the r10
-   ``_pq_knobs`` helper edit shipped without re-verifying its dependents.
+   its last green driver row vouches for must be in the window.
 
-This tool (a) prints the stale and changed lists so DRIVER_ORDER can be
-rebuilt by hand at round start, and (b) writes
-``tools/driver_manifest.json`` mapping each query to the source hash it
-will have been verified against: queries inside the new window get their
-*current* hash (they are about to be re-verified); queries outside keep
-their previous manifest hash (their old row vouches for the old source).
+Selection (:func:`select_window`) takes, in registration order within
+each class, until the window is full: the hard demands (stale, never
+verified, and changed entries whose recorded deferral is overdue); changed
+entries with no deferral to the target round; changed entries with one;
+then everything else, oldest latest green row first.
 
-Run at each round start AFTER updating DRIVER_ORDER:
+The manifest maps each query to the source hash it will have been
+verified against: window entries get their *current* hash (they are about
+to be re-verified); the rest keep their previous hash (their old row
+vouches for the old source).
+
+Run at each round start and after every engine edit:
 
     python tools/make_driver_order.py
 
-``--check`` validates without writing (the manifest is left
-byte-identical): exit 0 when no query requiring a window slot sits
-outside the window, exit 1 otherwise — the read-only round-start
-diagnostic (r14 verdict: the default mode rewriting governance state on
-every invocation was a footgun for a diagnostic).
+``--check`` validates the committed window without writing (the manifest
+is left byte-identical): exit 0 when no query requiring a window slot sits
+outside it, exit 1 otherwise. ``--defer-changed`` lets a write proceed when
+changed entries do not fit: each is marked ``deferred_round = target`` and
+becomes a hard demand the round after, so it cannot be deferred twice.
+Hard demands are never deferrable.
+
+Capacity policy: at 210 registered, P=6 holds through 250. Before
+registering past ~230, retire the labeled exact-baseline twins
+(``SCALE_PATHS``) from the rotation first — each is coverage-redundant with
+its production twin and pinned by the twins' recall tests — and only then
+raise P, which makes every row wait one round longer between re-verifies.
 """
 
 from __future__ import annotations
@@ -98,121 +104,169 @@ def latest_rows() -> tuple[dict[str, int], int]:
     return latest, max_round
 
 
-def main(check_only: bool = False, defer_changed: bool = False) -> None:
-    from lakehouse_workshop_spark.operators import all_queries
-    from lakehouse_workshop_spark.srchash import registry_hash
+def rotation_period(registry: int) -> int:
+    return max(3, -(-registry // DRIVER_WINDOW) + 1)
 
-    queries = all_queries()
-    names = list(queries)
-    window = set(names[:DRIVER_WINDOW])
-    latest, max_round = latest_rows()
 
-    prev = json.load(open(MANIFEST)) if MANIFEST.exists() else {}
-    prev.pop("_meta", None)
-    # Three slot-demanding classes (a registry larger than the window makes
-    # rotation inevitable; these are the rows that may NOT wait):
-    #   stale   — verified before, but the row is >= P rounds behind the
-    #             newest recorded round
-    #   pending — never driver-verified, INCLUDING queries registered this
-    #             round. (History: until round 8 brand-new queries got one
-    #             round of grace; the grace expired the moment the next
-    #             CORRECTNESS artifact landed, turning the suite red
-    #             between the artifact drop and the next builder rotation
-    #             — rounds 5 and 7 both hit it. Registration is now atomic
-    #             with windowing: this tool refuses to write the manifest
-    #             while any never-verified query sits outside the window,
-    #             so every query earns a driver row in its birth round.)
-    #   changed — source differs from the hash its last row vouched for
-    # Verified at round r -> must re-enter the window by building round
-    # r + P (P = rotation period), i.e. overdue when latest <= max_round
-    # + 1 - P.
-    period = max(3, -(-len(names) // DRIVER_WINDOW) + 1)
-    horizon = max_round + 1 - period
-    stale = [
-        n for n in names if 0 < latest.get(n, 0) <= horizon
-    ]
+def demands(
+    names: list[str],
+    prev: dict,
+    latest: dict[str, int],
+    max_round: int,
+    hashes: dict[str, str],
+) -> tuple[list[str], list[str], list[str], list[str]]:
+    """The slot-demanding classes, each in registration order:
+
+    stale   — verified before, but the row is >= P rounds behind the
+              newest recorded round
+    pending — never driver-verified, including queries registered this
+              round: registration is atomic with windowing
+    changed — source differs from the hash its last green row vouches
+              for (:func:`vouched`, not the staged hash, so a
+              changed-then-displaced entry cannot escape)
+    overdue — changed entries whose recorded deferral is older than the
+              target round (a deferral to the target itself is current)
+
+    Stale, pending and overdue are hard demands."""
+    horizon = max_round + 1 - rotation_period(len(names))
+    stale = [n for n in names if 0 < latest.get(n, 0) <= horizon]
     pending = [n for n in names if latest.get(n, 0) == 0]
-    # Hash drift only matters for entries a driver row vouches for
-    # (window_round set); a pending never-verified query has nothing to
-    # invalidate — its hash just refreshes on write.
-    # Drift compares against the hash a REAL driver row vouches for
-    # (verified_hash), not the staged hash of the latest write: an
-    # in-window write refreshes `hash` to current source, so a query
-    # whose source changed and which was then DISPLACED from the window
-    # in a later same-round write would otherwise compare new-vs-new and
-    # escape the changed-source rule entirely (r13 review finding #3).
-    # verified_hash only advances when a CORRECTNESS row lands for the
-    # round the staged hash was written for — and that promotion must
-    # apply HERE too, not only in the write loop below: at round start
-    # the previous round's artifact has landed but the manifest file
-    # still carries the pre-stage verified_hash, so comparing the raw
-    # field would spuriously flag every source-changed-last-round,
-    # verified-last-round, out-of-this-window entry as changed and
-    # refuse the write (first hit at r16: the 12 r15 consolidation
-    # re-verifies + token_counts/token_dist_shift, all r15-green,
-    # all correctly outside the r16 window). See :func:`vouched`.
     changed = [
         n
         for n in names
         if n in prev
         and prev[n].get("window_round") is not None
-        and vouched(prev[n], latest.get(n, 0)) != registry_hash(n)
+        and vouched(prev[n], latest.get(n, 0)) != hashes[n]
     ]
+    overdue = [
+        n for n in changed
+        if prev[n].get("deferred_round", max_round + 1) < max_round + 1
+    ]
+    return stale, pending, changed, overdue
+
+
+def select_window(
+    names: list[str],
+    prev: dict,
+    latest: dict[str, int],
+    max_round: int,
+    hard: set[str],
+    changed: set[str],
+    size: int = DRIVER_WINDOW,
+) -> set[str]:
+    """Hard demands, then changed entries without a deferral to the target
+    round, then those with one, then the rest by oldest latest green row.
+    The sort is stable, so each class keeps registration order."""
+
+    def rank(n: str) -> tuple[int, int]:
+        if n in hard:
+            return 0, 0
+        if n in changed:
+            return 1 + (prev[n].get("deferred_round") == max_round + 1), 0
+        return 3, latest.get(n, 0)
+
+    return set(sorted(names, key=rank)[:size])
+
+
+def build_manifest(
+    names: list[str],
+    prev: dict,
+    latest: dict[str, int],
+    max_round: int,
+    hashes: dict[str, str],
+    window: set[str],
+    deferrable: set[str],
+) -> dict:
+    target = max_round + 1
+    manifest = {
+        # The governance tests read as_of_round to evaluate staleness as
+        # of the state this manifest was built from: a CORRECTNESS
+        # artifact landing AFTER this write cannot flip the suite red.
+        # The grace ends at the builder's next engine commit (see
+        # tests/test_registry.py::test_manifest_rebuilt_after_artifact).
+        "_meta": {"as_of_round": max_round, "target_round": target},
+    }
+    for n in names:
+        p = prev.get(n, {})
+        latest_n = latest.get(n, 0)
+        # verified_hash promotion: the staged hash earns "verified" only
+        # when the driver row for its window_round exists. Until then the
+        # previously-verified hash keeps vouching.
+        vh = vouched(p, latest_n)
+        if n in window:
+            entry = {"hash": hashes[n], "window_round": target}
+        else:
+            entry = dict(p)
+            # An entry windowed at an earlier write of the SAME round but
+            # displaced before the driver ran carries a window_round no
+            # driver row backs, and a staged hash no row verified. Demote
+            # both to the newest real row so the record stays honest and
+            # a changed source keeps reading as changed.
+            wr = p.get("window_round")
+            if wr is not None and wr > latest_n > 0:
+                entry.update(window_round=latest_n, hash=vh)
+        entry["first_seen_round"] = p.get("first_seen_round", target)
+        if n in deferrable:
+            entry["deferred_round"] = target
+        elif "deferred_round" in p and vh != hashes[n]:
+            # still owed: windowed or not, the deferral stands until a
+            # green row vouches for the current source
+            entry["deferred_round"] = p["deferred_round"]
+        else:
+            entry.pop("deferred_round", None)
+        if vh is not None:
+            entry["verified_hash"] = vh
+        manifest[n] = entry
+    return manifest
+
+
+def main(check_only: bool = False, defer_changed: bool = False) -> None:
+    from lakehouse_workshop_spark.operators import QUERIES, all_oracles, all_queries
+    from lakehouse_workshop_spark.srchash import governed_source_hash
+
+    queries, oracles = all_queries(), all_oracles()
+    names = list(QUERIES)  # registration order
+    hashes = {n: governed_source_hash(queries[n], oracles.get(n)) for n in names}
+    latest, max_round = latest_rows()
+    target = max_round + 1
+
+    prev = json.load(open(MANIFEST)) if MANIFEST.exists() else {}
+    prev.pop("_meta", None)
+    stale, pending, changed, overdue = demands(names, prev, latest, max_round, hashes)
+    hard = set(stale + pending + overdue)
+    if check_only:
+        window = set(list(queries)[:DRIVER_WINDOW])
+    else:
+        window = select_window(names, prev, latest, max_round, hard, set(changed))
     print(f"registry: {len(names)}, window: {len(window)}, "
           f"latest driver round: r{max_round:02d}")
+    period = rotation_period(len(names))
     print(f"rotation period: {period} rounds (registry {len(names)}, window {DRIVER_WINDOW})")
-    print(f"stale (latest row <= r{horizon:02d}): {len(stale)}")
+    print(f"stale (latest row <= r{target - period:02d}): {len(stale)}")
     print(f"  {stale}")
     print(f"pending (never verified, registered <= r{max_round:02d}): {pending}")
     print(f"changed since manifest: {len(changed)}")
     print(f"  {changed}")
 
-    # Validate BEFORE writing: a write with a not-yet-rebuilt DRIVER_ORDER
-    # would refresh out-of-window hashes and silently swallow the changed
-    # list on the next run.
-    #
-    # Changed-overflow deferral (r18): a cross-cutting optimization (the
-    # r18 conditional corpus-spread views) can drift MORE closures than
-    # the window holds — 68 changed vs 50 slots, unsatisfiable by
-    # construction. Rather than refusing forever, `--defer-changed` lets
-    # the write proceed with every changed-outside-window entry marked
-    # ``deferred_round = target_round``: its old verified_hash keeps
-    # vouching, the deferral is recorded in the manifest (auditable, the
-    # r13 silent-escape failure mode stays impossible), and at the NEXT
-    # round's validation a still-drifted deferred entry is a HARD slot
-    # demand like stale/pending — it cannot be deferred twice. Stale and
-    # pending demands are never deferrable.
-    # a deferral recorded for THIS target round (the post-write --check
-    # re-reads its own deferral) is current; anything older is overdue
-    deferred_due = [
-        n
-        for n in changed
-        if n not in window
-        and prev.get(n, {}).get("deferred_round") is not None
-        and prev[n]["deferred_round"] < max_round + 1
-    ]
-    hard = sorted((set(stale + pending) - window) | set(deferred_due))
-    deferrable = sorted(set(changed) - window - set(hard))
-    if hard:
-        print(f"!! queries requiring a window slot but outside it: {hard}")
-        if deferred_due:
-            print(
-                f"!! (already-deferred changed entries cannot defer again:"
-                f" {sorted(deferred_due)})"
-            )
-        print("!! manifest NOT written — rebuild DRIVER_ORDER first")
+    missing = [n for n in names if n in hard and n not in window]
+    if missing:
+        print(f"!! queries requiring a window slot but outside it: {missing}")
+        if any(n in missing for n in overdue):
+            print(f"!! (already-deferred changed entries cannot defer again: {overdue})")
+        print("!! manifest NOT written — " + (
+            "rerun without --check to choose the window" if check_only
+            else f"{len(hard)} hard demands exceed the {DRIVER_WINDOW}-slot window"
+        ))
         sys.exit(1)
-    unrecorded = [
-        n
-        for n in deferrable
-        if prev.get(n, {}).get("deferred_round") != max_round + 1
-    ]
+    deferrable = [n for n in changed if n not in window]
+    unrecorded = [n for n in deferrable if prev[n].get("deferred_round") != target]
     if unrecorded and not defer_changed:
         print(
             f"!! changed-source queries outside the window: {unrecorded}\n"
-            "!! give them slots, or re-run with --defer-changed to record"
-            " an explicit one-round deferral (requires a same-session"
-            " full-registry parity run as compensating evidence)"
+            "!! a write gives them the free slots; those that do not fit"
+            " need --defer-changed, which records an explicit one-round"
+            " deferral (requires a same-session full-registry parity run"
+            " as compensating evidence)"
         )
         print("!! manifest NOT written")
         sys.exit(1)
@@ -220,66 +274,14 @@ def main(check_only: bool = False, defer_changed: bool = False) -> None:
         if deferrable:
             print(
                 f"--check: {len(deferrable)} changed entries carry a"
-                f" recorded deferral to r{max_round + 1:02d}: {deferrable}"
+                f" recorded deferral to r{target:02d}: {deferrable}"
             )
         print("--check: window satisfies all slot demands; manifest untouched")
         return
 
-    manifest = {
-        # The governance tests read as_of_round to evaluate staleness as
-        # of the state this manifest was built from: a CORRECTNESS
-        # artifact landing AFTER this write cannot flip the suite red.
-        # The grace ends at the builder's next engine commit (see
-        # tests/test_registry.py::test_manifest_rebuilt_after_artifact).
-        "_meta": {"as_of_round": max_round, "target_round": max_round + 1},
-    }
-    for n in names:
-        p = prev.get(n, {})
-        first_seen = p.get("first_seen_round", max_round + 1)
-        latest_n = latest.get(n, 0)
-        wr = p.get("window_round")
-        # verified_hash promotion: the staged hash earns "verified" only
-        # when the driver row for its window_round exists. Until then the
-        # previously-verified hash keeps vouching (legacy manifests
-        # without the field fall back to the recorded hash when a real
-        # row exists at all). Same rule as the validation above.
-        vh = vouched(p, latest_n)
-        if n in window:
-            entry = {
-                "hash": registry_hash(n),
-                "window_round": max_round + 1,
-                "first_seen_round": first_seen,
-            }
-            # entering the window clears any standing deferral
-        elif n in deferrable:
-            # changed source, explicitly deferred one round: the old
-            # verified_hash keeps vouching (set below via vh) and the
-            # deferral mark makes this entry a HARD slot demand at the
-            # next round's validation — it cannot escape or defer again.
-            entry = {
-                **p,
-                "first_seen_round": first_seen,
-                "deferred_round": max_round + 1,
-            }
-            if wr is not None and wr > latest_n > 0:
-                entry["window_round"] = latest_n
-        else:
-            # The validation above guarantees anything outside the window
-            # is already verified and fresh (fresh = current source
-            # matches verified_hash, so displacement cannot swallow a
-            # source change — a changed-then-displaced entry fails the
-            # validation and the tool refuses to write).
-            entry = {**p, "first_seen_round": first_seen}
-            # An entry windowed at an earlier write of the SAME round but
-            # displaced before the driver ran carries a window_round no
-            # driver row backs (r12 left six such entries claiming r12
-            # rows they never got). Demote to the newest real row so the
-            # record stays honest.
-            if wr is not None and wr > latest_n > 0:
-                entry["window_round"] = latest_n
-        if vh is not None:
-            entry["verified_hash"] = vh
-        manifest[n] = entry
+    manifest = build_manifest(
+        names, prev, latest, max_round, hashes, window, set(deferrable)
+    )
     MANIFEST.write_text(json.dumps(manifest, indent=1, sort_keys=True) + "\n")
     print(f"wrote {MANIFEST}")
 

@@ -115,7 +115,7 @@ def main() -> None:
             f"| {s['uwin']} |"
         )
     # Source-hash footer: the same change-atomicity rule that governs
-    # DRIVER_ORDER (r9 verdict ask #2 — both r9 plan rewrites shipped
+    # the driver window (r9 verdict ask #2 — both r9 plan rewrites shipped
     # without their plan rows). tests/test_registry.py::
     # test_plans_md_current compares every audited query's CURRENT
     # governed hash (transitive closure + oracle, srchash.py — since r11)
